@@ -1,12 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession, functions => F}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, XxHash64}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.types.StringType
+import java.util.concurrent.ConcurrentHashMap
 
-import graft.functions.{ExactCountDistinct, Fnv1a64, FnvGrams, HashSetCountDistinct, LevenshteinCapped, MisraGriesTopK, SketchAgg, SketchCount, SketchMergeAgg, SlidingMin, SortedInterAtLeast, SortedInterCount, TopKAgg, VectorDot}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+
+import graft.functions.{Count300k, ExactCountDistinct, Fnv1a64, FnvGrams, HashSetCountDistinct, LevenshteinCapped, MisraGriesTopK, SketchAgg, SketchCount, SketchMergeAgg, SlidingMin, SortedInterAtLeast, SortedInterCount, TopKAgg, VectorDot}
 
 /** Session-level wiring for the graft engine: function registration and
   * fixture-table access. Registration is the Spark analogue of the
@@ -16,93 +21,103 @@ import graft.functions.{ExactCountDistinct, Fnv1a64, FnvGrams, HashSetCountDisti
   */
 object Engine {
 
-  /** Idempotently register graft's SQL function surface on a session.
-    * Register-if-absent: re-registering an existing name makes Spark
-    * log a "replaced a previously registered function" WARN per name
-    * per call, and register() runs once per derived session and per
-    * helper entry point — a bench run would otherwise spray dozens of
-    * them into the harness log.
+  /** graft's SQL function surface, one `(name, info, builder)` row per
+    * function — the single table both [[register]] and
+    * [[GraftExtensions]] consume, so the two entry points cannot drift.
+    */
+  private[graft] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    def fn(name: String, cls: Class[_])(builder: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getCanonicalName, name), builder)
+    Seq(
+      // Exact multi-instance distinct count (the reference's one
+      // operator): native TypedImperativeAggregate on the hot path, its
+      // buffer picked from the argument type (integral keys as longs,
+      // everything else cast to STRING; SimplifyCasts drops a no-op)...
+      fn("count300k", classOf[HashSetCountDistinct])(Count300k(_)),
+      // ...and the idiomatic Aggregator surface under an explicit alias.
+      fn("count300k_agg", classOf[ScalaAggregator[_, _, _]])(exprs => ScalaAggregator(exprs,
+        ExactCountDistinct, encoderFor(Encoders.STRING), encoderFor(ExactCountDistinct.bufferEncoder),
+        aggregatorName = Some("count300k_agg"))),
+      // Codegen'd double dot product over float/double arrays (similarity path).
+      fn("vec_dot", classOf[VectorDot])(exprs => VectorDot(exprs(0), exprs(1))),
+      // The reference's own hash (FNV-1a 64, hashset-count.cc:49-59).
+      fn("fnv64", classOf[Fnv1a64])(exprs => Fnv1a64(exprs.head)),
+      // Bounded exact top-k with map-side cut (shuffle ≤ k per group/task).
+      fn("topk_agg", classOf[TopKAgg])(exprs => TopKAgg(exprs(0), exprs(1), exprs(2))),
+      // Misra–Gries heavy hitters: O(k) mergeable frequency summary
+      // (exact when per-group distinct ≤ k). Items coerce to STRING.
+      fn("mg_topk", classOf[MisraGriesTopK])(exprs =>
+        MisraGriesTopK(Cast(exprs(0), StringType), exprs(1))),
+      // One-pass text fingerprinting primitives (winnowing path): per-gram
+      // FNV and O(n) sliding-window min — tight loops where HOF lambdas
+      // would run interpreted per element.
+      fn("fnv_grams", classOf[FnvGrams])(exprs => FnvGrams(exprs(0), exprs(1))),
+      fn("sliding_min", classOf[SlidingMin])(exprs => SlidingMin(exprs(0), exprs(1))),
+      // Zero-allocation exact intersection count over sorted word sets
+      // (the MinHash verification hot path).
+      fn("sorted_inter_count", classOf[SortedInterCount])(exprs =>
+        SortedInterCount(exprs(0), exprs(1))),
+      // Threshold-gated variant with early exit (LSH verification):
+      // exact count when Jaccard >= tn/td, -1 (cheaply) when below.
+      fn("sorted_inter_atleast", classOf[SortedInterAtLeast])(SortedInterAtLeast.fromExprs),
+      // Capped banded Levenshtein (edit-dedup verification): exact
+      // distance when <= cap, cap + 1 otherwise, in O(cap * L) not L^2.
+      fn("levenshtein_capped", classOf[LevenshteinCapped])(LevenshteinCapped.fromExprs),
+      // count300k's state as a persistable column: build / roll up /
+      // finalize exact distinct-set sketches (SketchWire format — the
+      // same bytes the count300k shuffle carries).
+      fn("sketch_agg", classOf[SketchAgg])(exprs => SketchAgg(Cast(exprs.head, StringType))),
+      fn("sketch_merge", classOf[SketchMergeAgg])(exprs => SketchMergeAgg(exprs.head)),
+      fn("sketch_count", classOf[SketchCount])(exprs => SketchCount(exprs.head)),
+      // Spark's own runtime-filter machinery, surfaced as SQL functions:
+      // bloom_agg(key[, n_items, n_bits]) builds the fixed-size sketch,
+      // bloom_contains(sketch, key) probes it. Keys are canonicalized
+      // before XxHash64 (see [[hashKey]]). n_items/n_bits coerce to
+      // BIGINT: BloomFilterAggregate type-checks them as BIGINT
+      // literals, and the natural SQL spelling `bloom_agg(k, 100, 4096)`
+      // parses them as INT.
+      fn("bloom_agg", classOf[BloomFilterAggregate]) {
+        case Seq(k) => new BloomFilterAggregate(hashKey(k))
+        case Seq(k, n, b) =>
+          new BloomFilterAggregate(hashKey(k), Cast(n, LongType), Cast(b, LongType))
+        case exprs => throw new IllegalArgumentException(
+          s"bloom_agg(key[, n_items, n_bits]) — got ${exprs.length} args")
+      },
+      fn("bloom_contains", classOf[BloomFilterMightContain])(exprs =>
+        BloomFilterMightContain(exprs(0), hashKey(exprs(1)))))
+  }
+
+  /** Idempotently register graft's SQL function surface ([[functions]])
+    * on a session. Register-if-absent: re-registering an existing name
+    * makes Spark log a "replaced a previously registered function" WARN
+    * per name per call, and register() runs once per derived session
+    * and per helper entry point — a bench run would otherwise spray
+    * dozens of them into the harness log.
     */
   def register(spark: SparkSession): SparkSession = synchronized {
     pinUtc(spark)
     val registry = spark.sessionState.functionRegistry
-    def temp(name: String)(builder: Seq[Expression] => Expression): Unit =
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
-    // Exact multi-instance distinct count (the reference's one operator):
-    // native TypedImperativeAggregate on the hot path...
-    // Non-string arguments are coerced here; SimplifyCasts drops the no-op.
-    temp("count300k")(exprs => HashSetCountDistinct(Cast(exprs.head, StringType)))
-    // ...and the idiomatic Aggregator surface under an explicit alias.
-    if (!registry.functionExists(FunctionIdentifier("count300k_agg")))
-      spark.udf.register("count300k_agg", F.udaf(ExactCountDistinct, Encoders.STRING))
-    // Codegen'd double dot product over float/double arrays (similarity path).
-    temp("vec_dot")(exprs => VectorDot(exprs(0), exprs(1)))
-    // The reference's own hash (FNV-1a 64, hashset-count.cc:49-59).
-    temp("fnv64")(exprs => Fnv1a64(exprs.head))
-    // Bounded exact top-k with map-side cut (shuffle ≤ k per group/task).
-    temp("topk_agg")(exprs => TopKAgg(exprs(0), exprs(1), exprs(2)))
-    // Misra–Gries heavy hitters: O(k) mergeable frequency summary
-    // (exact when per-group distinct ≤ k). Items coerce like count300k.
-    temp("mg_topk")(exprs => MisraGriesTopK(Cast(exprs(0), StringType), exprs(1)))
-    // One-pass text fingerprinting primitives (winnowing path): per-gram
-    // FNV and O(n) sliding-window min — tight loops where HOF lambdas
-    // would run interpreted per element.
-    temp("fnv_grams")(exprs => FnvGrams(exprs(0), exprs(1)))
-    temp("sliding_min")(exprs => SlidingMin(exprs(0), exprs(1)))
-    // Zero-allocation exact intersection count over sorted word sets
-    // (the MinHash verification hot path).
-    temp("sorted_inter_count")(exprs => SortedInterCount(exprs(0), exprs(1)))
-    // Threshold-gated variant with early exit (LSH verification):
-    // exact count when Jaccard >= tn/td, -1 (cheaply) when below.
-    temp("sorted_inter_atleast")(SortedInterAtLeast.fromExprs)
-    // Capped banded Levenshtein (edit-dedup verification): exact
-    // distance when <= cap, cap + 1 otherwise, in O(cap * L) not L^2.
-    temp("levenshtein_capped")(LevenshteinCapped.fromExprs)
-    // count300k's state as a persistable column: build / roll up /
-    // finalize exact distinct-set sketches (SketchWire format — the
-    // same bytes the count300k shuffle carries).
-    temp("sketch_agg")(exprs => SketchAgg(Cast(exprs.head, StringType)))
-    temp("sketch_merge")(exprs => SketchMergeAgg(exprs.head))
-    temp("sketch_count")(exprs => SketchCount(exprs.head))
-    // Spark's own runtime-filter machinery, surfaced as SQL functions:
-    // bloom_agg(key[, n_items, n_bits]) builds the fixed-size sketch,
-    // bloom_contains(sketch, key) probes it. Keys are canonicalized
-    // before XxHash64: every NUMERIC type goes through DOUBLE, then
-    // everything through STRING (the count300k coercion) — so an INT
-    // dim build vs a BIGINT fact probe, or a DECIMAL(10,2) build
-    // ('5.00') vs an integer probe ('5'), hash identically. Raw
-    // XxHash64 hashes IntegerType and LongType differently, and the
-    // bare string cast renders decimals with their scale — either
-    // would be a SILENT no-false-negatives violation. The double hop
-    // can merge distinct >2^53 integers (same direction as the
-    // sketch's own collisions: extra false POSITIVES, never false
-    // negatives — build and probe of one value render identically).
-    // (InjectRuntimeFilter avoids all this by hashing post-coercion
-    // join keys; a SQL surface has no analyzer to lean on, so it
-    // canonicalizes instead.)
-    // n_items/n_bits coerce to BIGINT: BloomFilterAggregate type-checks
-    // them as BIGINT literals, and the natural SQL spelling
-    // `bloom_agg(k, 100, 4096)` parses them as INT
-    temp("bloom_agg") {
-      case Seq(k) => new BloomFilterAggregate(hashKey(k))
-      case Seq(k, n, b) => new BloomFilterAggregate(
-        hashKey(k),
-        Cast(n, org.apache.spark.sql.types.LongType),
-        Cast(b, org.apache.spark.sql.types.LongType))
-      case exprs => throw new IllegalArgumentException(
-        s"bloom_agg(key[, n_items, n_bits]) — got ${exprs.length} args")
+    functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
     }
-    temp("bloom_contains")(exprs =>
-      BloomFilterMightContain(exprs(0), hashKey(exprs(1))))
     spark
   }
 
-  /** Bloom-key canonicalization shared by [[register]] and
-    * [[GraftExtensions]] (see the `bloom_agg` registration comment for
-    * the full rationale). The `resolved` guard is belt-and-braces:
-    * builders run on resolved children, but an unresolved key must
-    * fall back rather than throw on `.dataType`.
+  /** Bloom-key canonicalization for `bloom_agg`/`bloom_contains`.
+    * Every NUMERIC key goes through DOUBLE, then every key through
+    * STRING (the count300k coercion) — so an INT dim build vs a BIGINT
+    * fact probe, or a DECIMAL(10,2) build ('5.00') vs an integer probe
+    * ('5'), hash identically. Raw XxHash64 hashes IntegerType and
+    * LongType differently, and the bare string cast renders decimals
+    * with their scale — either would be a SILENT no-false-negatives
+    * violation. The double hop can merge distinct >2^53 integers (same
+    * direction as the sketch's own collisions: extra false POSITIVES,
+    * never false negatives — build and probe of one value render
+    * identically). (InjectRuntimeFilter avoids all this by hashing
+    * post-coercion join keys; a SQL surface has no analyzer to lean
+    * on, so it canonicalizes instead.) The `resolved` guard is
+    * belt-and-braces: builders run on resolved children, but an
+    * unresolved key must fall back rather than throw on `.dataType`.
     */
   private[graft] def hashKey(k: Expression): XxHash64 = {
     val canon =
@@ -133,13 +148,63 @@ object Engine {
     * TIMESTAMP (every graft session runs UTC, so the instants are
     * unchanged) so downstream `unix_micros`/watermark arithmetic keeps
     * the same types as DuckDB's `epoch_us(ts)` on the oracle side.
+    *
+    * A single-file table's schema is inferred once per file version
+    * ([[readParquet]]), so only the first read of a file pays Spark's
+    * schema-inference job; a directory is inferred on every read.
     */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val df = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events") {
       pinUtc(spark)
-      spark.read.parquet(s"$dir/$name.parquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+      df.withColumn("ts", F.col("ts").cast("timestamp"))
+    } else df
+  }
+
+  /** A parquet file's version as schema inference sees it: qualified
+    * path, length, modification time, and the session's parquet
+    * settings (`binaryAsString`, `int96AsTimestamp`,
+    * `inferTimestampNTZ.enabled` and every other explicitly set
+    * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` key, plus case
+    * sensitivity — all that Spark's parquet schema converter reads).
+    */
+  private final case class FileVersion(
+      path: String, length: Long, modified: Long, settings: Map[String, String])
+
+  /** The last inferred schema of each single parquet file, by qualified path. */
+  private val fileSchemas = new ConcurrentHashMap[String, (FileVersion, StructType)]
+
+  /** `spark.read.parquet(path)`, minus the Spark job its schema
+    * inference launches on every read. For a single file the schema
+    * Spark infers is remembered with the file's version (see
+    * [[FileVersion]]) and handed to `spark.read.schema(..)` while the
+    * version holds; a rewritten file, or a session with other parquet
+    * inference settings, is inferred afresh. A directory (or a path
+    * that does not exist) keeps Spark's normal read.
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val settings = spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+            k == "spark.sql.caseSensitive"
+        }
+        val version = FileVersion(st.getPath.toString, st.getLen, st.getModificationTime, settings)
+        val schema = Option(fileSchemas.get(version.path)).collect {
+          case (v, s) if v == version => s
+        }.getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          fileSchemas.put(version.path, (version, inferred))
+          inferred
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** Every graft session runs UTC: the events fixture is TIMESTAMP_NTZ
     * and its cast to session-zone TIMESTAMP (in [[table]]) only

@@ -1,12 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Cast
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.types.StringType
-
-import graft.functions.{Fnv1a64, LevenshteinCapped, FnvGrams, HashSetCountDistinct, MisraGriesTopK, SketchAgg, SketchCount, SketchMergeAgg, SlidingMin, SortedInterAtLeast, SortedInterCount, TopKAgg, VectorDot}
 
 /** Cluster-wide injection point: set
   * `spark.sql.extensions=graft.GraftExtensions` and every session —
@@ -26,86 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // [[graft.operators.MaintenanceSql]]
     ext.injectParser((_, delegate) =>
       new graft.operators.MaintenanceParser(delegate))
-    ext.injectFunction((
-      FunctionIdentifier("count300k"),
-      new ExpressionInfo(classOf[HashSetCountDistinct].getCanonicalName, "count300k"),
-      (exprs: Seq[Expression]) =>
-        HashSetCountDistinct(Cast(exprs.head, StringType))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VectorDot].getCanonicalName, "vec_dot"),
-      (exprs: Seq[Expression]) => VectorDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("fnv64"),
-      new ExpressionInfo(classOf[Fnv1a64].getCanonicalName, "fnv64"),
-      (exprs: Seq[Expression]) => Fnv1a64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("topk_agg"),
-      new ExpressionInfo(classOf[TopKAgg].getCanonicalName, "topk_agg"),
-      (exprs: Seq[Expression]) => TopKAgg(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("fnv_grams"),
-      new ExpressionInfo(classOf[FnvGrams].getCanonicalName, "fnv_grams"),
-      (exprs: Seq[Expression]) => FnvGrams(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sliding_min"),
-      new ExpressionInfo(classOf[SlidingMin].getCanonicalName, "sliding_min"),
-      (exprs: Seq[Expression]) => SlidingMin(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_inter_count"),
-      new ExpressionInfo(classOf[SortedInterCount].getCanonicalName, "sorted_inter_count"),
-      (exprs: Seq[Expression]) => SortedInterCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_inter_atleast"),
-      new ExpressionInfo(classOf[SortedInterAtLeast].getCanonicalName, "sorted_inter_atleast"),
-      (exprs: Seq[Expression]) => SortedInterAtLeast.fromExprs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("levenshtein_capped"),
-      new ExpressionInfo(classOf[LevenshteinCapped].getCanonicalName, "levenshtein_capped"),
-      (exprs: Seq[Expression]) => LevenshteinCapped.fromExprs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("sketch_agg"),
-      new ExpressionInfo(classOf[SketchAgg].getCanonicalName, "sketch_agg"),
-      (exprs: Seq[Expression]) => SketchAgg(Cast(exprs.head, StringType))))
-    ext.injectFunction((
-      FunctionIdentifier("sketch_merge"),
-      new ExpressionInfo(classOf[SketchMergeAgg].getCanonicalName, "sketch_merge"),
-      (exprs: Seq[Expression]) => SketchMergeAgg(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("sketch_count"),
-      new ExpressionInfo(classOf[SketchCount].getCanonicalName, "sketch_count"),
-      (exprs: Seq[Expression]) => SketchCount(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("mg_topk"),
-      new ExpressionInfo(classOf[MisraGriesTopK].getCanonicalName, "mg_topk"),
-      (exprs: Seq[Expression]) =>
-        MisraGriesTopK(Cast(exprs(0), StringType), exprs(1))))
-    // Spark's own runtime-filter machinery behind Engine.hashKey's
-    // cross-type canonicalization — same builders Engine.register uses
-    ext.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate]
-          .getCanonicalName, "bloom_agg"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(k) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-            Engine.hashKey(k))
-        case Seq(k, n, b) => // INT literals coerce to the required BIGINT
-          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-            Engine.hashKey(k),
-            Cast(n, org.apache.spark.sql.types.LongType),
-            Cast(b, org.apache.spark.sql.types.LongType))
-        case other => throw new IllegalArgumentException(
-          s"bloom_agg(key[, n_items, n_bits]) — got ${other.length} args")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]
-          .getCanonicalName, "bloom_contains"),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), Engine.hashKey(exprs(1)))))
+    // graft's SQL functions: the same table Engine.register consumes
+    Engine.functions.foreach(ext.injectFunction)
   }
 }

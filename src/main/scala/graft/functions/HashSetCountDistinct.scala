@@ -4,9 +4,10 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Hot-path `count300k`: exact hashset-based distinct count as a native
@@ -40,6 +41,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * Values are stored as owned `UTF8String` copies: `child.eval` can return
   * a string backed by a reused row buffer, so the first sighting of each
   * distinct value is cloned (duplicates never allocate).
+  *
+  * This is the buffer for every argument type except the integral ones:
+  * the SQL builder ([[Count300k]]) sends BYTE/SHORT/INT/BIGINT
+  * arguments to [[IntegralCountDistinct]] and casts everything else to
+  * STRING here. A float, decimal, date or timestamp argument is counted
+  * by its rendering, which is not always a count of its values (NaN
+  * payloads all render as `NaN`, `-0.0` equals `0.0` but renders
+  * differently, a local timestamp repeats at the DST fall-back), so
+  * those types keep the rendering semantics they have always had.
   */
 case class HashSetCountDistinct(
     child: Expression,
@@ -77,4 +87,39 @@ case class HashSetCountDistinct(
   override protected def withNewChildInternal(
       newChild: Expression): HashSetCountDistinct =
     copy(child = newChild)
+}
+
+/** The one `count300k` builder, used by both [[graft.Engine.register]]
+  * and [[graft.GraftExtensions]]: the buffer is picked from the
+  * argument's type. A BYTE/SHORT/INT/BIGINT argument, or a
+  * `CAST(<integral> AS STRING)` of one, is counted in
+  * [[IntegralCountDistinct]]'s primitive long set; any other argument is
+  * cast to STRING and counted in [[HashSetCountDistinct]]. Both give the
+  * same answer for an integral argument (see [[IntegralCountDistinct]]).
+  */
+object Count300k {
+
+  def apply(args: Seq[Expression]): TypedImperativeAggregate[_] = {
+    val arg = args.head
+    integralInput(arg) match {
+      case Some(x) => IntegralCountDistinct(x, castArg = x ne arg)
+      case None => HashSetCountDistinct(Cast(arg, StringType))
+    }
+  }
+
+  def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** The integral expression `arg` counts, if any. An unresolved
+    * argument has no type yet and takes the string buffer.
+    */
+  private def integralInput(arg: Expression): Option[Expression] =
+    if (!arg.resolved) None
+    else arg match {
+      case c: Cast if c.dataType == StringType && isIntegral(c.child.dataType) => Some(c.child)
+      case _ if isIntegral(arg.dataType) => Some(arg)
+      case _ => None
+    }
 }

@@ -47,30 +47,145 @@ object SketchWire {
   def mergeInto(
       buf: mutable.HashSet[UTF8String],
       bytes: Array[Byte]): mutable.HashSet[UTF8String] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
+    val n = checkFrames(bytes)
     buf.sizeHint(buf.size + n)
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt
-      val arr = new Array[Byte](len)
-      bb.get(arr)
-      buf += UTF8String.fromBytes(arr)
-      i += 1
+    foreachValue(bytes, n) { (off, len) =>
+      buf += UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, off, off + len))
     }
     buf
   }
 
   /** Distinct count carried by a serialized sketch — the leading int32;
-    * the values themselves are never touched. Malformed input (fewer
-    * than 4 bytes) fails loudly rather than reading garbage.
+    * the values themselves are never touched. A header that cannot be
+    * a sketch (fewer than 4 bytes, a negative count, or more values than
+    * the bytes can frame) fails loudly rather than reading garbage.
     */
   def count(bytes: Array[Byte]): Int = {
     if (bytes == null || bytes.length < 4)
       throw new IllegalArgumentException(
         s"not a graft sketch: ${if (bytes == null) "null" else s"${bytes.length} bytes"}")
-    ByteBuffer.wrap(bytes).getInt
+    val n = ByteBuffer.wrap(bytes).getInt
+    if (n < 0) malformed(s"negative value count $n at byte 0")
+    if (n > (bytes.length - 4) / 4)
+      malformed(s"value count $n at byte 0 exceeds what ${bytes.length - 4} bytes can frame")
+    n
   }
+
+  /** Validate the whole frame structure of `bytes` and return its value
+    * count, before any caller allocates for it: the count must be
+    * non-negative and fit the bytes (each value needs its 4-byte
+    * length), and every length must be non-negative and fit what
+    * remains. `sketch_merge` takes any user BINARY column, so a
+    * malformed blob must fail here — not as a negative-size or
+    * multi-gigabyte allocation.
+    */
+  private def checkFrames(bytes: Array[Byte]): Int = {
+    val n = count(bytes)
+    val bb = ByteBuffer.wrap(bytes)
+    var pos = 4
+    var i = 0
+    while (i < n) {
+      if (bytes.length - pos < 4) malformed(s"value ${i + 1} of $n has no length at byte $pos")
+      val len = bb.getInt(pos)
+      if (len < 0) malformed(s"negative value length $len at byte $pos")
+      if (len > bytes.length - pos - 4)
+        malformed(s"value length $len at byte $pos exceeds the ${bytes.length - pos - 4} bytes remaining")
+      pos += 4 + len
+      i += 1
+    }
+    n
+  }
+
+  /** Call `f(offset, length)` for each of the `n` values of a sketch
+    * that [[checkFrames]] accepted.
+    */
+  private def foreachValue(bytes: Array[Byte], n: Int)(f: (Int, Int) => Unit): Unit = {
+    val bb = ByteBuffer.wrap(bytes)
+    var pos = 4
+    var i = 0
+    while (i < n) {
+      val len = bb.getInt(pos)
+      f(pos + 4, len)
+      pos += 4 + len
+      i += 1
+    }
+  }
+
+  /** [[serialize]] for [[IntegralCountDistinct]]'s buffer: each value
+    * framed as its decimal rendering — byte for byte the sketch the
+    * string buffer writes for `CAST(x AS STRING)`, so shuffle and
+    * streaming-state bytes do not depend on which buffer counted.
+    */
+  def serializeLongs(buf: LongSet): Array[Byte] = {
+    var total = 4
+    buf.foreach(v => total += 4 + decimalLength(v))
+    val out = new Array[Byte](total)
+    val bb = ByteBuffer.wrap(out)
+    bb.putInt(buf.size)
+    var pos = 4
+    buf.foreach { v =>
+      val len = decimalLength(v)
+      bb.putInt(pos, len)
+      writeDecimal(out, pos + 4 + len, v)
+      pos += 4 + len
+    }
+    out
+  }
+
+  /** Union a serialized sketch of decimal integer renderings into a
+    * [[LongSet]]. A value that is not a canonical rendering of a
+    * BIGINT (no sign but '-', no leading zero, no "-0") is rejected:
+    * two renderings of one number would otherwise count once here and
+    * twice in the string buffer.
+    */
+  def mergeLongsInto(buf: LongSet, bytes: Array[Byte]): LongSet = {
+    val n = checkFrames(bytes)
+    buf.sizeHint(buf.size + n)
+    foreachValue(bytes, n)((off, len) => buf.add(parseDecimal(bytes, off, len)))
+    buf
+  }
+
+  private val Pow10: Array[Long] = Array.iterate(1L, 19)(_ * 10)
+
+  /** Bytes of `v`'s decimal rendering, sign included. */
+  private def decimalLength(v: Long): Int =
+    if (v == Long.MinValue) 20
+    else {
+      val a = math.abs(v)
+      var d = 1
+      while (d < 19 && a >= Pow10(d)) d += 1
+      if (v < 0) d + 1 else d
+    }
+
+  /** Write `v`'s decimal rendering so that it ends just before `end`. */
+  private def writeDecimal(out: Array[Byte], end: Int, v: Long): Unit = {
+    var x = if (v < 0) v else -v // negative, so Long.MinValue needs no case
+    var i = end
+    while ({ i -= 1; out(i) = ('0' - x % 10).toByte; x /= 10; x != 0 }) ()
+    if (v < 0) out(i - 1) = '-'
+  }
+
+  private def parseDecimal(bytes: Array[Byte], off: Int, len: Int): Long = {
+    def bad(): Nothing = malformed(
+      s"value at byte ${off - 4} is not a decimal integer: " +
+        new String(bytes, off, math.min(len, 24), java.nio.charset.StandardCharsets.UTF_8))
+    val end = off + len
+    val neg = len > 0 && bytes(off) == '-'
+    val first = if (neg) off + 1 else off
+    if (first == end || (bytes(first) == '0' && (end - first > 1 || neg))) bad()
+    var acc = 0L // accumulated negatively, so Long.MinValue fits
+    var i = first
+    while (i < end) {
+      val d = bytes(i) - '0'
+      if (d < 0 || d > 9 || acc < (Long.MinValue + d) / 10) bad()
+      acc = acc * 10 - d
+      i += 1
+    }
+    if (neg) acc else if (acc == Long.MinValue) bad() else -acc
+  }
+
+  private def malformed(why: String): Nothing =
+    throw new IllegalArgumentException(s"not a graft sketch: $why")
 }
 
 /** Shared buffer lifecycle for hash-set aggregates: empty-set init,

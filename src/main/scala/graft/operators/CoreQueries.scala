@@ -110,22 +110,23 @@ object CoreQueries {
     * (the reference's own law); unbounded-cardinality groups take the
     * bounded HLL siblings (`hll_sketch_agg`/`hll_union_agg`), spec'd
     * in SketchSpec. Result stays lazy over the sketch store
-    * ([[graft.Lease]] owns the dir lifetime).
+    * ([[graft.Lease]] owns the dir lifetime), which is read back with
+    * the schema it was written with, as the streaming rollups do.
     */
   def qSketchRollup(spark: SparkSession, dir: String): DataFrame = {
     Engine.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_sketch").toString
-    try {
-      Engine.table(spark, dir, "events")
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(expr("sketch_agg(cast(user_id as string))").as("sk"))
-        .write.mode("overwrite").parquet(base)
-    } catch {
+    val daily = Engine.table(spark, dir, "events")
+      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+      .agg(expr("sketch_agg(cast(user_id as string))").as("sk"))
+    try daily.write.mode("overwrite").parquet(base)
+    catch {
       case e: Throwable =>
         scala.util.Try(graft.Fs.deleteRecursively(base)); throw e
     }
     graft.Lease.lease("q_sketch_rollup", Seq(base))
-    spark.read.parquet(base)
+    // read back with the writer's schema: no schema-inference job
+    spark.read.schema(daily.schema).parquet(base)
       .groupBy(trunc(col("day"), "month").as("month"), col("event_type"))
       .agg(expr("sketch_count(sketch_merge(sk))").as("distinct_users"),
         count(lit(1)).cast("long").as("n_days"))

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.{HashSetCountDistinct, IntegralCountDistinct}
 
 /** The spark.sql.extensions deployment path: a session built with only
   * the config (no Engine.register call) must expose graft's functions.
@@ -60,6 +63,36 @@ class GraftExtensionsSpec extends AnyFunSuite {
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)
+    }
+  }
+
+  test("registry parity: GraftExtensions and Engine.register expose the same functions") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    val shared = SparkSpec.session
+    def registry(s: SparkSession) = s.sessionState.functionRegistry
+    def graftNames(s: SparkSession): Set[String] =
+      registry(s).listFunction().filterNot(FunctionRegistry.builtin.functionExists).map(_.funcName).toSet
+    // a new session of the shared context gets only the injected
+    // functions (its context is configured with GraftExtensions)
+    val viaExtensions = shared.newSession()
+    // the same, with the injected functions dropped: Engine.register
+    // then registers into a builtin-only registry
+    val viaEngine = shared.newSession()
+    graftNames(viaEngine).foreach(n => registry(viaEngine).dropFunction(FunctionIdentifier(n)))
+    assert(graftNames(viaEngine).isEmpty)
+    Engine.register(viaEngine)
+    assert(graftNames(viaExtensions) == graftNames(viaEngine))
+    assert(graftNames(viaEngine) == Engine.functions.map(_._1.funcName).toSet)
+    assert(Set("count300k", "count300k_agg", "sketch_agg", "bloom_agg").subsetOf(graftNames(viaEngine)))
+    // both plan count300k to the same aggregate, by argument type
+    def planned(s: SparkSession, arg: String): Seq[Class[_]] =
+      s.range(10).selectExpr(s"count300k($arg)").queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case a: AggregateExpression => a.aggregateFunction.getClass }))
+    for ((arg, cls) <- Seq("id" -> classOf[IntegralCountDistinct],
+        "concat('k', id)" -> classOf[HashSetCountDistinct])) {
+      assert(planned(viaExtensions, arg) == Seq(cls), arg)
+      assert(planned(viaEngine, arg) == Seq(cls), arg)
     }
   }
 
