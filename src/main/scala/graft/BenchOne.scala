@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time named queries (or all) with plans on demand.
   * `runMain graft.BenchOne [-explain] [-n N] q1 q2 ...`
   *
@@ -32,15 +30,7 @@ object BenchOne {
       case (a, i) if !a.startsWith("-") && i != nValIdx => a
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val picked =
       if (names.isEmpty) SparkEntry.queries else SparkEntry.queries.filter(kv => names.contains(kv._1))
     picked.toSeq.sortBy(_._1).foreach { case (name, fn) =>

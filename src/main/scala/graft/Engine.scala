@@ -3,15 +3,14 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession, functions => F}
-import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.SPARK_DOC_ROOT
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
-import graft.functions.{Count300k, ExactCountDistinct, Fnv1a64, FnvGrams, HashSetCountDistinct, LevenshteinCapped, MisraGriesTopK, SketchAgg, SketchCount, SketchMergeAgg, SlidingMin, SortedInterAtLeast, SortedInterCount, TopKAgg, VectorDot}
+import graft.functions.{Count300k, Fnv1a64, FnvGrams, HashSetCountDistinct, LevenshteinCapped, MisraGriesTopK, SketchAgg, SketchCount, SketchMergeAgg, SlidingMin, SortedInterAtLeast, SortedInterCount, TopKAgg, VectorDot}
 
 /** Session-level wiring for the graft engine: function registration and
   * fixture-table access. Registration is the Spark analogue of the
@@ -24,51 +23,58 @@ object Engine {
   /** graft's SQL function surface, one `(name, info, builder)` row per
     * function — the single table both [[register]] and
     * [[GraftExtensions]] consume, so the two entry points cannot drift.
+    * Each row names the argument counts it accepts; any other count
+    * fails analysis with Spark's own `WRONG_NUM_ARGS` before the
+    * builder runs, as a built-in function does.
     */
   private[graft] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
-    def fn(name: String, cls: Class[_])(builder: Seq[Expression] => Expression) =
-      (FunctionIdentifier(name), new ExpressionInfo(cls.getCanonicalName, name), builder)
+    def fn(name: String, cls: Class[_], arities: Int*)(builder: Seq[Expression] => Expression) = {
+      def checked(exprs: Seq[Expression]): Expression =
+        if (arities.contains(exprs.length)) builder(exprs)
+        else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+          "functionName" -> s"`$name`",
+          "expectedNum" -> (if (arities.length == 1) arities.head.toString else arities.mkString("[", ", ", "]")),
+          "actualNum" -> exprs.length.toString,
+          "docroot" -> SPARK_DOC_ROOT))
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getCanonicalName, name), checked _)
+    }
     Seq(
       // Exact multi-instance distinct count (the reference's one
-      // operator): native TypedImperativeAggregate on the hot path, its
-      // buffer picked from the argument type (integral keys as longs,
-      // everything else cast to STRING; SimplifyCasts drops a no-op)...
-      fn("count300k", classOf[HashSetCountDistinct])(Count300k(_)),
-      // ...and the idiomatic Aggregator surface under an explicit alias.
-      fn("count300k_agg", classOf[ScalaAggregator[_, _, _]])(exprs => ScalaAggregator(exprs,
-        ExactCountDistinct, encoderFor(Encoders.STRING), encoderFor(ExactCountDistinct.bufferEncoder),
-        aggregatorName = Some("count300k_agg"))),
+      // operator): native TypedImperativeAggregate, its buffer picked
+      // from the argument type (integral keys as longs, everything else
+      // cast to STRING; SimplifyCasts drops a no-op).
+      fn("count300k", classOf[HashSetCountDistinct], 1)(Count300k(_)),
       // Codegen'd double dot product over float/double arrays (similarity path).
-      fn("vec_dot", classOf[VectorDot])(exprs => VectorDot(exprs(0), exprs(1))),
+      fn("vec_dot", classOf[VectorDot], 2)(exprs => VectorDot(exprs(0), exprs(1))),
       // The reference's own hash (FNV-1a 64, hashset-count.cc:49-59).
-      fn("fnv64", classOf[Fnv1a64])(exprs => Fnv1a64(exprs.head)),
+      fn("fnv64", classOf[Fnv1a64], 1)(exprs => Fnv1a64(exprs.head)),
       // Bounded exact top-k with map-side cut (shuffle ≤ k per group/task).
-      fn("topk_agg", classOf[TopKAgg])(exprs => TopKAgg(exprs(0), exprs(1), exprs(2))),
+      fn("topk_agg", classOf[TopKAgg], 3)(exprs => TopKAgg(exprs(0), exprs(1), exprs(2))),
       // Misra–Gries heavy hitters: O(k) mergeable frequency summary
       // (exact when per-group distinct ≤ k). Items coerce to STRING.
-      fn("mg_topk", classOf[MisraGriesTopK])(exprs =>
+      fn("mg_topk", classOf[MisraGriesTopK], 2)(exprs =>
         MisraGriesTopK(Cast(exprs(0), StringType), exprs(1))),
       // One-pass text fingerprinting primitives (winnowing path): per-gram
       // FNV and O(n) sliding-window min — tight loops where HOF lambdas
       // would run interpreted per element.
-      fn("fnv_grams", classOf[FnvGrams])(exprs => FnvGrams(exprs(0), exprs(1))),
-      fn("sliding_min", classOf[SlidingMin])(exprs => SlidingMin(exprs(0), exprs(1))),
+      fn("fnv_grams", classOf[FnvGrams], 2)(exprs => FnvGrams(exprs(0), exprs(1))),
+      fn("sliding_min", classOf[SlidingMin], 2)(exprs => SlidingMin(exprs(0), exprs(1))),
       // Zero-allocation exact intersection count over sorted word sets
       // (the MinHash verification hot path).
-      fn("sorted_inter_count", classOf[SortedInterCount])(exprs =>
+      fn("sorted_inter_count", classOf[SortedInterCount], 2)(exprs =>
         SortedInterCount(exprs(0), exprs(1))),
       // Threshold-gated variant with early exit (LSH verification):
       // exact count when Jaccard >= tn/td, -1 (cheaply) when below.
-      fn("sorted_inter_atleast", classOf[SortedInterAtLeast])(SortedInterAtLeast.fromExprs),
+      fn("sorted_inter_atleast", classOf[SortedInterAtLeast], 4)(SortedInterAtLeast.fromExprs),
       // Capped banded Levenshtein (edit-dedup verification): exact
       // distance when <= cap, cap + 1 otherwise, in O(cap * L) not L^2.
-      fn("levenshtein_capped", classOf[LevenshteinCapped])(LevenshteinCapped.fromExprs),
+      fn("levenshtein_capped", classOf[LevenshteinCapped], 3)(LevenshteinCapped.fromExprs),
       // count300k's state as a persistable column: build / roll up /
       // finalize exact distinct-set sketches (SketchWire format — the
       // same bytes the count300k shuffle carries).
-      fn("sketch_agg", classOf[SketchAgg])(exprs => SketchAgg(Cast(exprs.head, StringType))),
-      fn("sketch_merge", classOf[SketchMergeAgg])(exprs => SketchMergeAgg(exprs.head)),
-      fn("sketch_count", classOf[SketchCount])(exprs => SketchCount(exprs.head)),
+      fn("sketch_agg", classOf[SketchAgg], 1)(exprs => SketchAgg(Cast(exprs.head, StringType))),
+      fn("sketch_merge", classOf[SketchMergeAgg], 1)(exprs => SketchMergeAgg(exprs.head)),
+      fn("sketch_count", classOf[SketchCount], 1)(exprs => SketchCount(exprs.head)),
       // Spark's own runtime-filter machinery, surfaced as SQL functions:
       // bloom_agg(key[, n_items, n_bits]) builds the fixed-size sketch,
       // bloom_contains(sketch, key) probes it. Keys are canonicalized
@@ -76,14 +82,12 @@ object Engine {
       // BIGINT: BloomFilterAggregate type-checks them as BIGINT
       // literals, and the natural SQL spelling `bloom_agg(k, 100, 4096)`
       // parses them as INT.
-      fn("bloom_agg", classOf[BloomFilterAggregate]) {
+      fn("bloom_agg", classOf[BloomFilterAggregate], 1, 3) {
         case Seq(k) => new BloomFilterAggregate(hashKey(k))
         case Seq(k, n, b) =>
           new BloomFilterAggregate(hashKey(k), Cast(n, LongType), Cast(b, LongType))
-        case exprs => throw new IllegalArgumentException(
-          s"bloom_agg(key[, n_items, n_bits]) — got ${exprs.length} args")
       },
-      fn("bloom_contains", classOf[BloomFilterMightContain])(exprs =>
+      fn("bloom_contains", classOf[BloomFilterMightContain], 2)(exprs =>
         BloomFilterMightContain(exprs(0), hashKey(exprs(1)))))
   }
 

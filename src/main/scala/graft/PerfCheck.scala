@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Isolated hot-path measurement: count300k vs the built-in exact
   * countDistinct, in a dedicated session with nothing else running —
   * the number SURVEY §8 cites. (AggPerfSpec runs the same comparison
@@ -18,15 +16,7 @@ object PerfCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.register(spark)
+    val spark = Sessions.local()
 
     def time(sql: String): Double = {
       val t0 = System.nanoTime()

@@ -120,15 +120,8 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val dir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val out = new StringBuilder
     out ++= "# PLANS — formatted physical plans of the headline queries\n\n"
     out ++= "Generated by `sbt \"runMain graft.PlanDump\"` at sf0.001, AQE off\n"

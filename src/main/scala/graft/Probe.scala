@@ -85,9 +85,9 @@ object Probe {
   }
 
   /** Standalone window check: three single-thread readings, then one
-    * parallel reading (`par=`). With `--spark`, also builds a minimal
-    * local session and prints three readings of the SAME fixed Spark
-    * job the bench brackets with (`spark=`) — the pre-flight view of
+    * parallel reading (`par=`). With `--spark`, also builds the
+    * engine's local session ([[Sessions]]) and prints three readings
+    * of the SAME fixed Spark job the bench brackets with (`spark=`) — the pre-flight view of
     * the third throttle class, which the pure-CPU readings provably
     * miss (round-17 run 2: par probe 0.55 minutes before launch, yet
     * the run's own spark probes read 1.25/1.12 and the artifact
@@ -97,11 +97,7 @@ object Probe {
     println((1 to 3).map(_ => f"${cpuProbeSecs()}%.4f").mkString(",") +
       f",par=${cpuProbeParSecs()}%.4f")
     if (args.contains("--spark")) {
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Sessions.local()
       sparkProbeSecs(spark) // untimed codegen warm-up
       println((1 to 3).map(_ => f"${sparkProbeSecs(spark)}%.4f")
         .mkString("spark=", ",", ""))

@@ -2,11 +2,8 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -28,8 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `merge` ≈ `DistHashSetMerge` (`hashset-count.cc:269-461`) — a plain
   *     set union; the reference's sort-merge-over-bucket-order dance existed
   *     only because its serialized form was a flat delimited string
-  *   - `eval` ≈ `DistHashSetFinalize` incl. the empty-set→NULL rule and
-  *     STRING output (`hashset-count.cc:464-524`, `README.md:28`)
+  *   - `eval` ≈ `DistHashSetFinalize` incl. the empty-set→NULL rule (an
+  *     empty or all-NULL group is NULL, not ANSI `COUNT(DISTINCT)`'s 0;
+  *     the empty string is a value and counts once) and STRING output
+  *     (`hashset-count.cc:464-524`, `README.md:28`)
   *
   * Unlike the reference's fixed 300,000 buckets (`hashset-count.cc:67`),
   * the buffer grows with cardinality; `count300k` survives as a name only.
@@ -40,7 +39,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Values are stored as owned `UTF8String` copies: `child.eval` can return
   * a string backed by a reused row buffer, so the first sighting of each
-  * distinct value is cloned (duplicates never allocate).
+  * distinct value is cloned (duplicates never allocate). `update`,
+  * `merge` and the wire format are [[HashSetAggBase]]'s, shared with
+  * `sketch_agg`.
   *
   * This is the buffer for every argument type except the integral ones:
   * the SQL builder ([[Count300k]]) sends BYTE/SHORT/INT/BIGINT
@@ -55,25 +56,13 @@ case class HashSetCountDistinct(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends HashSetAggBase with UnaryLike[Expression] {
-
-  override def update(
-      buf: mutable.HashSet[UTF8String],
-      input: InternalRow): mutable.HashSet[UTF8String] = {
-    val v = child.eval(input)
-    if (v != null) addOwned(buf, v.asInstanceOf[UTF8String])
-    buf
-  }
+    extends HashSetAggBase {
 
   override def eval(buf: mutable.HashSet[UTF8String]): Any =
     if (buf.isEmpty) null else UTF8String.fromString(buf.size.toString)
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"count300k requires a STRING argument, got ${child.dataType.sql}")
   override def prettyName: String = "count300k"
 
   override def withNewMutableAggBufferOffset(

@@ -76,13 +76,11 @@ object LevenshteinCapped {
     */
   val MaxCap: Int = 1 << 20
 
-  /** Builder for function registration: the cap must be a foldable
-    * WHOLE-number literal (it is baked into codegen; a fractional cap
+  /** Builder for function registration (three arguments; the registry
+    * checks the count): the cap must be a foldable WHOLE-number literal (it is baked into codegen; a fractional cap
     * is a caller bug, not something to truncate silently).
     */
   def fromExprs(exprs: Seq[Expression]): LevenshteinCapped = {
-    require(exprs.length == 3,
-      s"levenshtein_capped expects 3 arguments, got ${exprs.length}")
     require(exprs(2).foldable,
       "levenshtein_capped argument 3 (cap) must be a literal integer")
     val cap = exprs(2).eval() match {

@@ -166,12 +166,11 @@ case class SortedInterAtLeast(left: Expression, right: Expression, tn: Int, td: 
 }
 
 object SortedInterAtLeast {
-  /** Builder for function registration: the threshold arguments must
-    * be foldable integer literals (they are baked into codegen).
+  /** Builder for function registration (four arguments; the registry
+    * checks the count): the threshold arguments must be foldable integer
+    * literals (they are baked into codegen).
     */
   def fromExprs(exprs: Seq[Expression]): SortedInterAtLeast = {
-    require(exprs.length == 4,
-      s"sorted_inter_atleast expects 4 arguments, got ${exprs.length}")
     def lit(e: Expression, pos: Int): Int = {
       require(e.foldable,
         s"sorted_inter_atleast argument $pos must be a literal integer")

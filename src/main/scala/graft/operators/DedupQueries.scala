@@ -163,10 +163,8 @@ object DedupQueries {
     * unchanged.
     */
   def qMinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    lshPairs(spark, dir, (df, label, consumed) => {
-      val ck = staged(label) {
-        df.localCheckpoint() // eager: runs the stage now
-      }
+    lshPairs(spark, dir, (df, consumed) => {
+      val ck = df.localCheckpoint() // eager: runs the stage now
       consumed.foreach(_.unpersist())
       ck
     })
@@ -177,37 +175,25 @@ object DedupQueries {
     * this form. Runs the three guard counts but no other jobs.
     */
   private[graft] def qMinhashLshPlan(spark: SparkSession, dir: String): DataFrame =
-    lshPairs(spark, dir, (df, _, _) => df)
+    lshPairs(spark, dir, (df, _) => df)
 
-  /** Per-stage wall-clock to stderr when GRAFT_STAGE_LOG is set — the
-    * debugging hook for this query's recorded driver-run bimodality
-    * (which stage stalls, not just that the total did).
-    */
-  private def staged[A](label: String)(body: => A): A =
-    if (sys.env.contains("GRAFT_STAGE_LOG")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[lsh] $label%-12s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-      r
-    } else body
-
-  /** The shared pipeline; `cut(stage, label, consumedCaches)` is
+  /** The shared pipeline; `cut(stage, consumedCaches)` is
     * applied at the three stage boundaries (post-banding,
     * post-verification, post-expansion).
     */
   private def lshPairs(
       spark: SparkSession, dir: String,
-      cut: (DataFrame, String, Seq[DataFrame]) => DataFrame): DataFrame = {
+      cut: (DataFrame, Seq[DataFrame]) => DataFrame): DataFrame = {
     Engine.register(spark) // sorted_inter_count on the verification path
     val docs = uniqueSets(spark, dir).cache()
     val reps = docs.groupBy(col("fp")).agg(
       min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_members"),
       first(col("ws")).as("ws"), size(first(col("ws"))).as("n"))
       .cache()
-    val nReps = staged("reps.count")(reps.count()) // materializes both caches; guards the hints
-    val nDocs = staged("docs.count")(docs.count()) // cheap: docs is cached by the count above
+    val nReps = reps.count() // materializes both caches; guards the hints
+    val nDocs = docs.count() // cheap: docs is cached by the count above
     val vocab = reps.select(explode(col("ws")).as("w")).distinct().cache()
-    val nVocab = staged("vocab.count")(vocab.count()) // materializes the cache; guards the hint
+    val nVocab = vocab.count() // materializes the cache; guards the hint
     // Ceilings are session-conf-overridable so the shuffle-fallback
     // path is TESTABLE on real data without a >2^20-row fixture
     // (LshFallbackSpec forces both to 0 and asserts the no-hint plan
@@ -246,7 +232,7 @@ object DedupQueries {
         .select(col("fp") +: col("ws") +: col("n") +: bandCols: _*)
         .select(col("fp") +: col("ws") +: col("n") +: bandNames :+
           posexplode(array(bandNames: _*)).as(Seq("band", "bh")): _*),
-      "buckets", Seq(vocab))
+      Seq(vocab))
     // One (l,r) join row per shared band; three inline kills keep the
     // pipeline allocation-free and exactly-once per pair, all inside
     // the join's codegen loop:
@@ -297,7 +283,7 @@ object DedupQueries {
     // so the expansion stage starts from the small true-pair set. The
     // buckets checkpoint is dereferenced after this (its blocks fall
     // to the ContextCleaner); no cache()s to release.
-    val verifiedM = cut(verified, "verify", Seq.empty)
+    val verifiedM = cut(verified, Seq.empty)
 
     // expand cross-clique doc pairs (normalize to i < j); the member
     // map is one reused broadcast while it fits, so expansion is
@@ -328,7 +314,7 @@ object DedupQueries {
       cross.unionByName(intra)
         .select(col("i"), col("j"), col("inter"), col("union_n"),
           floor(lit(100.0) * col("inter") / col("union_n")).cast("long").as("jac_pct")),
-      "expand", Seq(docs, reps))
+      Seq(docs, reps))
     pairs.orderBy("i", "j")
   }
 
@@ -1090,7 +1076,7 @@ object DedupQueries {
 
   def qNeardupIngest(spark: SparkSession, dir: String): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("graft_lshstore").toString
-    try staged("store.build")(buildLshStoreCached(spark, dir, base))
+    try buildLshStoreCached(spark, dir, base)
     catch {
       case e: Throwable =>
         scala.util.Try(graft.Fs.deleteRecursively(base)); throw e
@@ -1132,10 +1118,10 @@ object DedupQueries {
   def qNeardupAppend(spark: SparkSession, dir: String): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("graft_lshappend").toString
     try {
-      staged("store.build")(buildLshStoreCached(spark, dir, base))
-      staged("store.append")(appendLshStore(spark,
+      buildLshStoreCached(spark, dir, base)
+      appendLshStore(spark,
         Engine.table(spark, dir, "documents").filter(col("doc_id") % 4 === 1),
-        base))
+        base)
     } catch {
       case e: Throwable =>
         scala.util.Try(graft.Fs.deleteRecursively(base)); throw e

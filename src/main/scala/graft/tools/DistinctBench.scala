@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** BASELINE.md's exact-set sizing harness: the SAME multi-distinct
@@ -19,15 +19,7 @@ import org.apache.spark.sql.functions._
 object DistinctBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Engine.register(spark)
+    val spark = graft.Sessions.local()
     spark.range(1000000).selectExpr("count(distinct id % 100)").collect()
 
     def li = graft.Engine.table(spark, sfDir, "lineitem")

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixture scaler: replicate the driver-generated sf0.1
@@ -78,12 +78,7 @@ object ScaleGen {
     val Array(src, dst, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     Files.createDirectories(Paths.get(dst))
     graft.Engine.tableNames.foreach { name =>
       val base = spark.read.parquet(s"$src/$name.parquet")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,7 +84,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
     Engine.register(viaEngine)
     assert(graftNames(viaExtensions) == graftNames(viaEngine))
     assert(graftNames(viaEngine) == Engine.functions.map(_._1.funcName).toSet)
-    assert(Set("count300k", "count300k_agg", "sketch_agg", "bloom_agg").subsetOf(graftNames(viaEngine)))
+    assert(Set("count300k", "sketch_agg", "bloom_agg").subsetOf(graftNames(viaEngine)))
+    // every function takes only its own argument counts and rejects the
+    // rest as a built-in does, before its builder sees the arguments
+    val arities = Map("count300k" -> Seq(1), "vec_dot" -> Seq(2), "fnv64" -> Seq(1),
+      "topk_agg" -> Seq(3), "mg_topk" -> Seq(2), "fnv_grams" -> Seq(2), "sliding_min" -> Seq(2),
+      "sorted_inter_count" -> Seq(2), "sorted_inter_atleast" -> Seq(4),
+      "levenshtein_capped" -> Seq(3), "sketch_agg" -> Seq(1), "sketch_merge" -> Seq(1),
+      "sketch_count" -> Seq(1), "bloom_agg" -> Seq(1, 3), "bloom_contains" -> Seq(2))
+    assert(arities.keySet == graftNames(viaEngine))
+    for (s <- Seq(viaExtensions, viaEngine); (name, ns) <- arities;
+         n <- (ns.min - 1 to ns.max + 1).filterNot(ns.contains)) {
+      val e = intercept[AnalysisException](s.sql(s"SELECT $name(${Seq.fill(n)("1").mkString(", ")})"))
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", s"$name with $n arguments: ${e.getMessage}")
+      assert(e.getMessage.contains(s"`$name` requires"), e.getMessage)
+    }
     // both plan count300k to the same aggregate, by argument type
     def planned(s: SparkSession, arg: String): Seq[Class[_]] =
       s.range(10).selectExpr(s"count300k($arg)").queryExecution.optimizedPlan

@@ -1,11 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.Gen
 
 import graft.SparkSpec
 
@@ -137,6 +139,35 @@ class IntegralCountDistinctSpec extends SparkSpec {
       vs.foldLeft(fast.createAggregationBuffer())((x, v) => { x.add(v); x })))
     assert(fast.merge(bufOf(a), bufOf(values)).size == values.size)
     assert(fast.merge(bufOf(b), bufOf(a)).size == values.size)
+  }
+
+  // --- the algebra through the real callbacks (AggLaws) ---------------
+
+  /** Longs with NULLs, zero (LongSet keeps 0 as a flag, not a slot), the
+    * extremes, and small values that repeat.
+    */
+  private val genLongs: Gen[List[Option[Long]]] = Gen.listOf(Gen.oneOf(
+    Gen.const(None), Gen.const(Some(0L)), Gen.const(Some(Long.MinValue)),
+    Gen.const(Some(Long.MaxValue)), Gen.choose(-3L, 3L).map(Some(_)),
+    Gen.choose(Long.MinValue, Long.MaxValue).map(Some(_))))
+
+  private def longAgg = IntegralCountDistinct(BoundReference(0, LongType, nullable = true))
+  private def longRow(v: Option[Long]): InternalRow = InternalRow(v.map(Long.box).orNull)
+
+  test("property: count equals exact distinct of non-null inputs") {
+    for (xs <- AggLaws.samples(genLongs, 200)) {
+      val expected = AggLaws.expectedCount(xs.flatten.distinct.size)
+      assert(AggLaws.asString(AggLaws.twoPhase(longAgg, Seq(xs.map(longRow)))) == expected, s"input=$xs")
+    }
+  }
+
+  test("property: partition-invariance — any split merges to the same result") {
+    for (xs <- AggLaws.samples(genLongs, 200); k <- Seq(1, 2, 3, 7)) {
+      val whole = AggLaws.direct(longAgg, xs.map(longRow))
+      val parts = AggLaws.split(xs.map(longRow), k)
+      assert(AggLaws.twoPhase(longAgg, parts) == whole, s"input=$xs k=$k")
+      assert(AggLaws.twoPhase(longAgg, parts.reverse) == whole, s"input=$xs k=$k (reversed)")
+    }
   }
 
   test("reading or merging a large set stays linear (hash-order inserts do not cluster)") {
