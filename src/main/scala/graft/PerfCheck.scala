@@ -23,25 +23,26 @@ object PerfCheck {
       spark.sql(sql).collect()
       (System.nanoTime() - t0) / 1e9
     }
-    val q = "cast(id % 300000 AS string)"
-    val single300k = s"SELECT count300k($q) FROM range(3000000)"
-    val singleBuiltin = s"SELECT count(DISTINCT $q) FROM range(3000000)"
-    val multi300k = (1 to 3)
-      .map(i => s"count300k(cast(id % ${i * 1000} AS string))")
-      .mkString("SELECT ", ", ", " FROM range(3000000)")
-    val multiBuiltin = (1 to 3)
-      .map(i => s"count(DISTINCT cast(id % ${i * 1000} AS string))")
-      .mkString("SELECT ", ", ", " FROM range(3000000)")
-
-    Seq(single300k, singleBuiltin, multi300k, multiBuiltin).foreach(time) // warm JIT+codegen
+    // a cast integral key takes the integral buffer, a string key the string buffer
+    val keys = Seq("integral" -> "cast(id % $m AS string)", "string" -> "concat('k', id % $m)")
+    val ours = (k: String) => s"count300k($k)"
+    val builtin = (k: String) => s"count(DISTINCT $k)"
+    def query(agg: String => String, key: String, ms: Seq[Int]) =
+      ms.map(m => agg(key.replace("$m", m.toString))).mkString("SELECT ", ", ", " FROM range(3000000)")
+    val queries = keys.flatMap { case (kind, key) =>
+      Seq(s"${kind}_single" -> Seq(300000), s"${kind}_multi3" -> Seq(1000, 2000, 3000)).map {
+        case (name, ms) => name -> (query(ours, key, ms), query(builtin, key, ms))
+      }
+    }
     val reps = 5
-    val t1 = median((1 to reps).map(_ => time(single300k)))
-    val t2 = median((1 to reps).map(_ => time(singleBuiltin)))
-    val t3 = median((1 to reps).map(_ => time(multi300k)))
-    val t4 = median((1 to reps).map(_ => time(multiBuiltin)))
-    println(
-      f"""{"count300k_s":$t1%.3f,"countDistinct_s":$t2%.3f,"ratio_single":${t1 / t2}%.2f,""" +
-      f""""multi3_count300k_s":$t3%.3f,"multi3_builtin_s":$t4%.3f,"ratio_multi":${t3 / t4}%.2f,"reps":$reps}""")
+    val fields = queries.flatMap { case (name, (q300k, qBuiltin)) =>
+      Seq(q300k, qBuiltin).foreach(time) // warm JIT+codegen
+      val t1 = median((1 to reps).map(_ => time(q300k)))
+      val t2 = median((1 to reps).map(_ => time(qBuiltin)))
+      Seq(f""""${name}_count300k_s":$t1%.3f""", f""""${name}_builtin_s":$t2%.3f""",
+        f""""${name}_ratio":${t1 / t2}%.2f""")
+    }
+    println((fields :+ s""""reps":$reps""").mkString("{", ",", "}"))
     spark.stop()
   }
 }

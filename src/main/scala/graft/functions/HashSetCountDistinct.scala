@@ -1,7 +1,5 @@
 package graft.functions
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
@@ -23,8 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     [[SketchWire]], shared with the persistable sketch-column
   *     surface (`sketch_agg`/`sketch_merge`/`sketch_count`)
   *   - `merge` ≈ `DistHashSetMerge` (`hashset-count.cc:269-461`) — a plain
-  *     set union; the reference's sort-merge-over-bucket-order dance existed
-  *     only because its serialized form was a flat delimited string
+  *     set union, streaming the smaller set's frames into the larger; the
+  *     reference's sort-merge-over-bucket-order dance existed only because
+  *     its serialized form was a flat delimited string
   *   - `eval` ≈ `DistHashSetFinalize` incl. the empty-set→NULL rule (an
   *     empty or all-NULL group is NULL, not ANSI `COUNT(DISTINCT)`'s 0;
   *     the empty string is a value and counts once) and STRING output
@@ -37,11 +36,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * pressure, replacing the reference's warn-and-hope spill handling
   * (`hashset-count.cc:200-205`).
   *
-  * Values are stored as owned `UTF8String` copies: `child.eval` can return
-  * a string backed by a reused row buffer, so the first sighting of each
-  * distinct value is cloned (duplicates never allocate). `update`,
-  * `merge` and the wire format are [[HashSetAggBase]]'s, shared with
-  * `sketch_agg`.
+  * Values are kept in a [[StringSet]]: one byte arena, laid out as the
+  * [[SketchWire]] sketch of the set, under an open-addressing index of
+  * (hash, offset) entries, so no object is made per value. `child.eval`
+  * can return a string backed by a reused row buffer, so the first
+  * sighting of each distinct value is copied into the arena (duplicates
+  * copy nothing). `update`, `merge` and the wire format are
+  * [[HashSetAggBase]]'s, shared with `sketch_agg`.
   *
   * This is the buffer for every argument type except the integral ones:
   * the SQL builder ([[Count300k]]) sends BYTE/SHORT/INT/BIGINT
@@ -58,8 +59,8 @@ case class HashSetCountDistinct(
     inputAggBufferOffset: Int = 0)
     extends HashSetAggBase {
 
-  override def eval(buf: mutable.HashSet[UTF8String]): Any =
-    if (buf.isEmpty) null else UTF8String.fromString(buf.size.toString)
+  override def eval(buf: StringSet): Any =
+    if (buf.size == 0) null else UTF8String.fromString(buf.size.toString)
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = true

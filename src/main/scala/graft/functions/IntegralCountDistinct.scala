@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** `count300k` over a BYTE/SHORT/INT/BIGINT argument (or a
   * `CAST(<integral> AS STRING)` of one, see [[Count300k]]): the values
   * are counted as longs in a [[LongSet]] instead of being rendered to
-  * `UTF8String`s and boxed into [[HashSetCountDistinct]]'s set — the
-  * per-type specialisation Impala's generated aggregation code makes.
+  * `UTF8String`s and framed in [[HashSetCountDistinct]]'s byte arena —
+  * the per-type specialisation Impala's generated aggregation code makes.
   *
   * The count is the string buffer's count: an integral type renders
   * injectively as decimal, so distinct values and distinct renderings
@@ -89,8 +89,8 @@ case class IntegralCountDistinct(
 /** Open-addressing set of longs: one power-of-two `long[]` table,
   * linear probing, Fibonacci hashing, at most half full. 0 marks an
   * empty slot, so the value 0 is kept as a flag. About 16-32 heap bytes
-  * per value, against a chained node, a `UTF8String` and a `byte[]`
-  * per value in the string buffer.
+  * per value, against the string buffer's ([[StringSet]]) index entry
+  * plus the value's framed decimal rendering.
   *
   * [[foreach]] walks the table in slot order, which is hash order, so
   * adding another set's values into a smaller table would pile them

@@ -58,7 +58,7 @@ case class MisraGriesTopK(
     val v = item.eval(input)
     if (v != null) {
       // defensive copy: the UTF8String may alias a reused row buffer
-      // (same hazard HashSetCountDistinct.scala:62-68 guards against)
+      // (the same hazard StringSet.add copies each new value's bytes for)
       buf.add(v.asInstanceOf[UTF8String].copy(), 1L, k)
     }
     buf

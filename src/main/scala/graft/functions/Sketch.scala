@@ -2,16 +2,14 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnaryExpression, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
-import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's exact-distinct-set wire format, shared by the in-query
@@ -19,41 +17,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * column surface ([[SketchAgg]]/[[SketchMergeAgg]]/[[SketchCount]]).
   *
   * Layout: `[int32 n] ([int32 len] [len bytes])*` — framed, compact,
-  * order-free. The reference's serialized 'D' form kept values in
-  * bucket order only so its delimited-string merge could stream
-  * (`/root/reference/hashset-count.cc:226-247`, `README.md:38-41`);
+  * order-free. A [[StringSet]] keeps its values in this layout, so
+  * writing one copies its frames out (in index order) and reading one
+  * adopts the bytes as they are. The reference's serialized 'D' form
+  * kept values in bucket order only so its delimited-string merge could
+  * stream (the reference's `hashset-count.cc:226-247`, `README.md:38-41`);
   * a framed format needs no ordering invariant and is `'\0'`-safe
   * where the reference documents silent corruption (`README.md:9`).
   */
 object SketchWire {
 
-  def serialize(buf: mutable.HashSet[UTF8String]): Array[Byte] = {
-    var total = 4
-    buf.foreach(s => total += 4 + s.numBytes())
-    val bb = ByteBuffer.allocate(total)
-    bb.putInt(buf.size)
-    buf.foreach { s =>
-      val bytes = s.getBytes
-      bb.putInt(bytes.length)
-      bb.put(bytes)
-    }
-    bb.array()
-  }
+  /** Largest sketch, in bytes: the longest array the JVM allocates. */
+  val MaxBytes: Int = ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH
 
-  def deserialize(bytes: Array[Byte]): mutable.HashSet[UTF8String] =
-    mergeInto(new mutable.HashSet[UTF8String], bytes)
-
-  /** Union a serialized set into a live buffer (no intermediate set). */
-  def mergeInto(
-      buf: mutable.HashSet[UTF8String],
-      bytes: Array[Byte]): mutable.HashSet[UTF8String] = {
-    val n = checkFrames(bytes)
-    buf.sizeHint(buf.size + n)
-    foreachValue(bytes, n) { (off, len) =>
-      buf += UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, off, off + len))
-    }
-    buf
-  }
+  /** `bytes` as an array length, for a sketch (or an arena) of `values`
+    * values in `bytes` bytes, summed as `Long`. Past [[MaxBytes]] it
+    * fails naming the SQL function `fn`, the value count and the size,
+    * instead of overflowing an `Int` into a negative length.
+    */
+  def checkedLength(fn: String, values: Long, bytes: Long): Int =
+    if (bytes <= MaxBytes) bytes.toInt
+    else throw new IllegalStateException(
+      s"$fn: a sketch of $values values needs $bytes bytes, past the $MaxBytes-byte limit of one sketch")
 
   /** Distinct count carried by a serialized sketch — the leading int32;
     * the values themselves are never touched. A header that cannot be
@@ -79,7 +64,7 @@ object SketchWire {
     * malformed blob must fail here — not as a negative-size or
     * multi-gigabyte allocation.
     */
-  private def checkFrames(bytes: Array[Byte]): Int = {
+  private[functions] def checkFrames(bytes: Array[Byte]): Int = {
     val n = count(bytes)
     val bb = ByteBuffer.wrap(bytes)
     var pos = 4
@@ -117,9 +102,9 @@ object SketchWire {
     * streaming-state bytes do not depend on which buffer counted.
     */
   def serializeLongs(buf: LongSet): Array[Byte] = {
-    var total = 4
+    var total = 4L
     buf.foreach(v => total += 4 + decimalLength(v))
-    val out = new Array[Byte](total)
+    val out = new Array[Byte](checkedLength("count300k", buf.size, total))
     val bb = ByteBuffer.wrap(out)
     bb.putInt(buf.size)
     var pos = 4
@@ -188,13 +173,13 @@ object SketchWire {
     throw new IllegalArgumentException(s"not a graft sketch: $why")
 }
 
-/** Shared buffer lifecycle for hash-set aggregates over one argument:
-  * empty-set init, size-aware union merge, [[SketchWire]] shuffle
-  * format, and the STRING update — NULLs skipped, and the first
-  * sighting of each distinct value copied (`child.eval` can return a
-  * string backed by a reused row buffer; duplicates never allocate).
-  * An aggregate over another input type overrides [[update]] and
-  * [[checkInputDataTypes]].
+/** Shared buffer lifecycle for the aggregates over one [[StringSet]]:
+  * empty-set init, union merge into the larger set, [[SketchWire]]
+  * shuffle format (the set's arena is that sketch; a partial read off
+  * the shuffle is adopted without a copy), and the STRING update —
+  * NULLs skipped, each value's bytes copied into the arena on its first
+  * sighting. An aggregate over another input type overrides [[update]]
+  * and [[checkInputDataTypes]].
   *
   * An abstract class, not a trait: a trait method reaches each
   * subclass through a forwarder and a static trampoline, two more
@@ -203,47 +188,40 @@ object SketchWire {
   * CPU in paired benchmark runs.
   */
 private[functions] abstract class HashSetAggBase
-    extends TypedImperativeAggregate[mutable.HashSet[UTF8String]] with UnaryLike[Expression] {
+    extends TypedImperativeAggregate[StringSet] with UnaryLike[Expression] {
 
-  override def createAggregationBuffer(): mutable.HashSet[UTF8String] =
-    mutable.HashSet.empty
+  override def createAggregationBuffer(): StringSet = new StringSet(prettyName)
 
-  override def update(
-      buf: mutable.HashSet[UTF8String],
-      input: InternalRow): mutable.HashSet[UTF8String] = {
-    val v = child.eval(input)
-    if (v != null) addOwned(buf, v.asInstanceOf[UTF8String])
+  // a bound column of an UnsafeRow is read in place, with no UTF8String per row
+  @transient private lazy val ordinal = child match {
+    case b: BoundReference => b.ordinal
+    case _ => -1
+  }
+
+  override def update(buf: StringSet, input: InternalRow): StringSet = {
+    input match {
+      case row: UnsafeRow if ordinal >= 0 =>
+        if (!row.isNullAt(ordinal)) {
+          val offsetAndSize = row.getLong(ordinal)
+          buf.add(row.getBaseObject, row.getBaseOffset + (offsetAndSize >> 32), offsetAndSize.toInt)
+        }
+      case _ =>
+        val v = child.eval(input).asInstanceOf[UTF8String]
+        if (v != null) buf.add(v.getBaseObject, v.getBaseOffset, v.numBytes)
+    }
     buf
   }
 
-  override def merge(
-      buf: mutable.HashSet[UTF8String],
-      other: mutable.HashSet[UTF8String]): mutable.HashSet[UTF8String] =
-    if (buf.size < other.size) other ++= buf else buf ++= other
+  override def merge(buf: StringSet, other: StringSet): StringSet = buf.union(other)
 
-  override def serialize(buf: mutable.HashSet[UTF8String]): Array[Byte] =
-    SketchWire.serialize(buf)
+  override def serialize(buf: StringSet): Array[Byte] = buf.toWire
 
-  override def deserialize(bytes: Array[Byte]): mutable.HashSet[UTF8String] =
-    SketchWire.deserialize(bytes)
+  override def deserialize(bytes: Array[Byte]): StringSet = StringSet.fromWire(prettyName, bytes)
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a STRING argument, got ${child.dataType.sql}")
-
-  /** Add an owned copy of `s` unless already present. Not
-    * `UTF8String.clone()`: when the string spans its whole backing
-    * array, getBytes/clone return that array unchanged — aliasing the
-    * mutable row buffer. Copy unconditionally on first sighting.
-    */
-  protected final def addOwned(
-      buf: mutable.HashSet[UTF8String], s: UTF8String): Unit =
-    if (!buf.contains(s)) {
-      val arr = new Array[Byte](s.numBytes())
-      s.writeToMemory(arr, Platform.BYTE_ARRAY_OFFSET)
-      buf += UTF8String.fromBytes(arr)
-    }
 }
 
 /** `sketch_agg(string) → binary`: the reference's distinct-count STATE
@@ -272,8 +250,7 @@ case class SketchAgg(
     inputAggBufferOffset: Int = 0)
     extends HashSetAggBase {
 
-  override def eval(buf: mutable.HashSet[UTF8String]): Any =
-    SketchWire.serialize(buf)
+  override def eval(buf: StringSet): Any = buf.toWire
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
@@ -301,16 +278,13 @@ case class SketchMergeAgg(
     inputAggBufferOffset: Int = 0)
     extends HashSetAggBase {
 
-  override def update(
-      buf: mutable.HashSet[UTF8String],
-      input: InternalRow): mutable.HashSet[UTF8String] = {
+  override def update(buf: StringSet, input: InternalRow): StringSet = {
     val v = child.eval(input)
-    if (v != null) SketchWire.mergeInto(buf, v.asInstanceOf[Array[Byte]])
+    if (v != null) buf.addWire(v.asInstanceOf[Array[Byte]])
     buf
   }
 
-  override def eval(buf: mutable.HashSet[UTF8String]): Any =
-    SketchWire.serialize(buf)
+  override def eval(buf: StringSet): Any = buf.toWire
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false

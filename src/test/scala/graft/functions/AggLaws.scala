@@ -1,5 +1,8 @@
 package graft.functions
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.scalacheck.Gen
@@ -38,4 +41,23 @@ object AggLaws {
 
   /** An `eval` result of count300k as a Scala string. */
   def asString(result: Any): String = Option(result).map(_.toString).orNull
+
+  /** A [[SketchWire]] sketch framing `values` as given, repeats included. */
+  def sketch(values: String*): Array[Byte] = {
+    val bytes = values.map(_.getBytes(StandardCharsets.UTF_8))
+    val bb = ByteBuffer.allocate(4 + bytes.map(4 + _.length).sum)
+    bb.putInt(values.size)
+    bytes.foreach(b => bb.putInt(b.length).put(b))
+    bb.array()
+  }
+
+  /** The values a [[SketchWire]] sketch frames, in frame order. */
+  def sketchValues(wire: Array[Byte]): Seq[String] = {
+    val bb = ByteBuffer.wrap(wire)
+    Seq.fill(bb.getInt) {
+      val b = new Array[Byte](bb.getInt)
+      bb.get(b)
+      new String(b, StandardCharsets.UTF_8)
+    }
+  }
 }

@@ -124,7 +124,8 @@ class IntegralCountDistinctSpec extends SparkSpec {
     val wire = fast.serialize(buf)
     assert(SketchWire.count(wire) == values.size)
     // the string buffer reads the integral wire as the renderings...
-    assert(strings.deserialize(wire).map(_.toString) == values.map(_.toString).toSet)
+    val read = AggLaws.sketchValues(strings.serialize(strings.deserialize(wire)))
+    assert(read.toSet == values.map(_.toString).toSet && read.size == values.size)
     // ...and the integral buffer reads the string buffer's wire back
     val sbuf = values.foldLeft(strings.createAggregationBuffer()) { (b, v) =>
       strings.update(b, org.apache.spark.sql.catalyst.InternalRow(UTF8String.fromString(v.toString)))
@@ -194,8 +195,7 @@ class IntegralCountDistinctSpec extends SparkSpec {
 
   test("integral wire values must be canonical BIGINT renderings") {
     val fast = IntegralCountDistinct(BoundReference(0, LongType, nullable = true))
-    def wire(vs: String*): Array[Byte] =
-      SketchWire.serialize(scala.collection.mutable.HashSet(vs.map(UTF8String.fromString): _*))
+    def wire(vs: String*): Array[Byte] = AggLaws.sketch(vs: _*)
     assert(fast.deserialize(wire("-9223372036854775808", "9223372036854775807", "0", "-5")).size == 4)
     for (bad <- Seq("", "-", "007", "-0", "+5", "1e3", "9223372036854775808", "-9223372036854775809", "a"))
       assert(intercept[IllegalArgumentException](fast.deserialize(wire(bad)))

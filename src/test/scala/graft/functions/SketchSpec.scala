@@ -1,6 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.Gen
 
 import graft.SparkSpec
 
@@ -131,5 +136,60 @@ class SketchSpec extends SparkSpec {
       .agg(expr("hll_sketch_estimate(hll_union_agg(hs))").as("est"))
       .as[Long].head()
     assert(math.abs(est - n) < n * 0.05, s"estimate $est vs exact $n")
+  }
+
+  // --- SketchWire properties through the aggregate callbacks (AggLaws) --
+
+  private val genValue: Gen[String] = Gen.oneOf(
+    Gen.const(""), Gen.const("\u0000"), Gen.const("dup"),
+    Gen.alphaNumStr.map(_.take(6)).map(s => s"$s\u0000$s"),
+    Gen.listOfN(2, Gen.choose(0x10000, 0x10FFFF)) // non-BMP: surrogate pairs, 4 UTF-8 bytes
+      .map(_.map(cp => new String(Character.toChars(cp))).mkString),
+    Gen.choose(100, 5000).map(n => "L" * n + n), // past the arena's first allocation
+    Gen.asciiStr.map(_.take(6)))
+  private val genValues: Gen[List[String]] =
+    Gen.listOf(Gen.frequency(9 -> genValue, 1 -> Gen.const(null: String)))
+
+  private val bound = BoundReference(0, StringType, nullable = true)
+  private def row(s: String): InternalRow =
+    InternalRow(if (s == null) null else UTF8String.fromString(s))
+  private def sketchOf(xs: Seq[String]): Array[Byte] = {
+    val agg = SketchAgg(bound)
+    agg.eval(xs.foldLeft(agg.createAggregationBuffer())((b, v) => agg.update(b, row(v))))
+      .asInstanceOf[Array[Byte]]
+  }
+  private def countOf(sketch: Array[Byte]): String =
+    AggLaws.asString(SketchCount(Literal(sketch, BinaryType)).eval())
+
+  test("property: sketches round-trip NUL, empty, non-BMP and long values") {
+    val agg = SketchAgg(bound)
+    for (xs <- AggLaws.samples(genValues, 150)) {
+      val distinct = xs.filter(_ != null).distinct
+      val sk = sketchOf(xs)
+      assert(AggLaws.sketchValues(sk).sorted == distinct.sorted, s"input=$xs") // no repeat
+      assert(countOf(sk) == AggLaws.expectedCount(distinct.size))
+      val back = agg.eval(agg.deserialize(agg.serialize(agg.deserialize(sk)))).asInstanceOf[Array[Byte]]
+      assert(AggLaws.sketchValues(back).sorted == distinct.sorted && countOf(back) == countOf(sk), s"input=$xs")
+    }
+  }
+
+  test("property: sketch_agg -> sketch_merge -> sketch_count is invariant under 1/2/3/7 splits, either merge order") {
+    val merge = SketchMergeAgg(BoundReference(0, BinaryType, nullable = true))
+    val direct = HashSetCountDistinct(bound)
+    for (xs <- AggLaws.samples(genValues, 120); k <- Seq(1, 2, 3, 7)) {
+      val whole = AggLaws.asString(AggLaws.direct(direct, xs.map(row)))
+      val distinct = xs.filter(_ != null).toSet
+      val splits = AggLaws.split(xs, k)
+      for (parts <- Seq(splits, splits.reverse)) {
+        val sketches = parts.map(p => InternalRow(sketchOf(p)))
+        // every sketch its own partial across the shuffle, and all in one partial
+        for (merged <- Seq(AggLaws.twoPhase(merge, sketches.map(Seq(_))), AggLaws.direct(merge, sketches))) {
+          val sk = merged.asInstanceOf[Array[Byte]]
+          assert(countOf(sk) == whole, s"input=$xs k=$k")
+          assert(AggLaws.sketchValues(sk).toSet == distinct && AggLaws.sketchValues(sk).size == distinct.size,
+            s"input=$xs k=$k")
+        }
+      }
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.SparkSpec
 
@@ -11,6 +13,8 @@ import graft.SparkSpec
   */
 class SketchWireSpec extends SparkSpec {
   import spark.implicits._
+
+  private val strings = HashSetCountDistinct(BoundReference(0, StringType, nullable = true))
 
   private def hex(s: String): Array[Byte] =
     s.grouped(2).map(b => Integer.parseInt(b, 16).toByte).toArray
@@ -32,7 +36,7 @@ class SketchWireSpec extends SparkSpec {
 
   test("SketchWire rejects malformed frames by byte offset, before allocating") {
     for ((blob, why) <- malformed) {
-      val msg = rejection(SketchWire.deserialize(hex(blob)))
+      val msg = rejection(strings.deserialize(hex(blob)))
       assert(msg.startsWith("not a graft sketch: ") && msg.contains(why), blob)
     }
     // count stays a header-only read: the header errors, nothing more
@@ -56,11 +60,33 @@ class SketchWireSpec extends SparkSpec {
   }
 
   test("well-formed sketches still merge and count") {
-    val a = SketchWire.serialize(SketchWire.deserialize(hex("00000002" + "00000001" + "61" + "00000000")))
+    val a = strings.serialize(strings.deserialize(hex("00000002" + "00000001" + "61" + "00000000")))
     val got = Seq(a, hex("00000001" + "00000001" + "62"), hex("00000000"))
       .toDF("sk").agg(expr("sketch_count(sketch_merge(sk))")).collect()(0).getString(0)
     assert(got == "3") // "a", "" and "b"
     assert(Seq(hex("00000000")).toDF("sk").select(expr("sketch_count(sk)"))
       .collect()(0).isNullAt(0))
+  }
+
+  test("a well-formed sketch that frames one value twice counts it once") {
+    val twice = "00000002" + "00000001" + "61" + "00000001" + "61" // n=2: "a", "a"
+    assert(spark.sql(s"SELECT sketch_count(sketch_merge(X'$twice'))").collect()(0).getString(0) == "1")
+    assert(Seq(hex(twice), hex("00000001" + "00000001" + "62")).toDF("sk")
+      .agg(expr("sketch_count(sketch_merge(sk))")).collect()(0).getString(0) == "2")
+  }
+
+  test("a sketch past 2 GB fails naming the function, the value count and the size") {
+    val max = SketchWire.MaxBytes.toLong
+    assert(SketchWire.checkedLength("count300k", 1, max) == max)
+    // 94M 19-digit BIGINTs, and 1.1M values of 2 KB: each sums past Int.MaxValue
+    for ((fn, values, bytes) <- Seq(
+        ("count300k", 94000000L, 4 + 94000000L * (4 + 19)),
+        ("sketch_agg", 1100000L, 4 + 1100000L * (4 + 2048)),
+        ("sketch_merge", 1L, max + 1))) {
+      assert(bytes > Int.MaxValue || bytes == max + 1)
+      val e = intercept[IllegalStateException](SketchWire.checkedLength(fn, values, bytes))
+      assert(e.getMessage == s"$fn: a sketch of $values values needs $bytes bytes, " +
+        s"past the $max-byte limit of one sketch")
+    }
   }
 }
