@@ -251,7 +251,12 @@ object Bench {
       .mkString("{", ",", "}")
     // headline fields FIRST: a tail-truncated capture of this line (the
     // round-6 BENCH artifact lost its tail) must still carry the total
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"window_dirty":$windowDirty,"fixture_build_total":$fixTotal,"fixture_build":$fixJson,"queries":$qs,"errors":$errs,"reruns":$reruns,"cpu_probe_s":$probeJson,"cpu_probe_par_s":$probeParJson,"spark_probe_s":$sparkProbeJson,"spark_probe_samples":$probeSamplesJson,"hot_spans":${hotSpans.size},"policy":"min-of-reruns above ${RerunThresholdSecs}s (slow-side only: small disclosed downward bias); hot mid-run probe spans re-measured once (window hygiene, cap $MaxRerunSpans spans); fixture templates pre-built untimed, seconds in fixture_build; see BASELINE.md variance + healthy bands"}""")
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"window_dirty":$windowDirty,"fixture_build_total":$fixTotal,"fixture_build":$fixJson,"queries":$qs,"errors":$errs,"reruns":$reruns,"cpu_probe_s":$probeJson,"cpu_probe_par_s":$probeParJson,"spark_probe_s":$sparkProbeJson,"spark_probe_samples":$probeSamplesJson,"hot_spans":${hotSpans.size},"policy":"min-of-reruns above ${RerunThresholdSecs}s (slow-side only: small disclosed downward bias); hot mid-run probe spans re-measured once (window hygiene, cap $MaxRerunSpans spans); fixture templates pre-built untimed, seconds in fixture_build; see BASELINE.md variance + healthy bands"}"""
+    println(full)
+    // the full line also goes to a fixed file, whole whatever a capture keeps
+    val lastJson = java.nio.file.Paths.get("target", "bench", "last.json")
+    java.nio.file.Files.createDirectories(lastJson.getParent)
+    java.nio.file.Files.writeString(lastJson, full + "\n")
     // The driver captures only the LAST 2KB of output, which truncates
     // the big line from the FRONT — so the headline numbers also go on
     // a short trailing line that always survives the tail capture.

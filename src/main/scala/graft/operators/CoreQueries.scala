@@ -167,17 +167,17 @@ object CoreQueries {
   def qHllRollup(spark: SparkSession, dir: String): DataFrame = {
     Engine.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_hll").toString
-    try {
-      Engine.table(spark, dir, "events")
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(expr("hll_sketch_agg(cast(user_id as string))").as("hs"))
-        .write.mode("overwrite").parquet(base)
-    } catch {
+    val daily = Engine.table(spark, dir, "events")
+      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+      .agg(expr("hll_sketch_agg(cast(user_id as string))").as("hs"))
+    try daily.write.mode("overwrite").parquet(base)
+    catch {
       case e: Throwable =>
         scala.util.Try(graft.Fs.deleteRecursively(base)); throw e
     }
     graft.Lease.lease("q_hll_rollup", Seq(base))
-    hllGate(spark, dir, spark.read.parquet(base))
+    // read back with the writer's schema: no schema-inference job
+    hllGate(spark, dir, spark.read.schema(daily.schema).parquet(base))
   }
 
   /** The merged-vs-direct HLL gate, shared by the batch and streaming
@@ -233,18 +233,18 @@ object CoreQueries {
   def qSketchIntersect(spark: SparkSession, dir: String): DataFrame = {
     Engine.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_skint").toString
-    try {
-      Engine.table(spark, dir, "events")
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(expr("sketch_agg(cast(user_id as string))").as("sk"))
-        .write.mode("overwrite").parquet(base)
-    } catch {
+    val daily = Engine.table(spark, dir, "events")
+      .filter(col("event_type").isin("click", "purchase"))
+      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+      .agg(expr("sketch_agg(cast(user_id as string))").as("sk"))
+    try daily.write.mode("overwrite").parquet(base)
+    catch {
       case e: Throwable =>
         scala.util.Try(graft.Fs.deleteRecursively(base)); throw e
     }
     graft.Lease.lease("q_sketch_intersect", Seq(base))
-    spark.read.parquet(base)
+    // read back with the writer's schema: no schema-inference job
+    spark.read.schema(daily.schema).parquet(base)
       .groupBy(trunc(col("day"), "month").as("month"))
       .agg(
         expr("""coalesce(cast(sketch_count(sketch_merge(
